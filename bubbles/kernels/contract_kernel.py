@@ -326,9 +326,9 @@ def make_bin_contract_kernel(boundary_bc, min_cluster_size: int):
     return kernel
 
 
-
 # ---------------------------------------------------------------------------
-# v2: chain-coalescing contraction (opt-in via MRHDBSCAN(coalesce_chains=True))
+# v2: chain-coalescing contraction, used by the recursive level-2 pass
+# (contract_bin above, MRHDBSCAN._global_step_recursive)
 #
 # v1 retains one hub edge + one virtual vertex PER MERGE EVENT along any
 # spine whose running mass is >= min_cluster_size — for a cap-sized leaf
@@ -545,21 +545,3 @@ def contract_subset_edges_v2(
         np.concatenate([np.asarray(out_w, np.float64), self_w.astype(np.float64)]),
         np.concatenate([np.asarray(out_w2, np.float64), detach]),
     )
-
-
-def make_contract_kernel_v2(boundary_bc, min_cluster_size: int):
-    """``applyInPandas`` wrapper for the chain-coalescing contraction;
-    ``boundary_bc`` broadcasts the frozenset of cross-edge endpoint
-    ids (same contract as v1's wrapper)."""
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        k, a, b, ww, ww2 = contract_subset_edges_v2(
-            pdf["src"].to_numpy(np.int64),
-            pdf["dst"].to_numpy(np.int64),
-            pdf["weight"].to_numpy(np.float64),
-            boundary_bc.value,
-            min_cluster_size,
-        )
-        return pd.DataFrame({"kind": k, "a": a, "b": b, "w": ww, "w2": ww2})
-
-    return kernel

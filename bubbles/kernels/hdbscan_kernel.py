@@ -726,8 +726,28 @@ def glosh_scores(result: HierarchyResult, core: np.ndarray) -> np.ndarray:
     return scores
 
 
+# the documented size limit of the per-level label matrix (points × levels)
+HIERARCHY_MAX_CELLS = 50_000_000
+
+
+def hierarchy_level_set(result: HierarchyResult, full: bool = False) -> set:
+    """The levels ``hierarchy_levels`` emits a row for: the distinct
+    cluster birth levels, plus every positive noise level when
+    ``full``."""
+    levels = {
+        float(c.birth)
+        for c in result.clusters.values()
+        if c.label != 1 and not np.isnan(c.birth)
+    }
+    if full:
+        levels |= {float(w) for w in result.noise_level if w > 0}
+    return levels
+
+
 def hierarchy_levels(
-    result: HierarchyResult, max_cells: int = 50_000_000, full: bool = False
+    result: HierarchyResult,
+    max_cells: int = HIERARCHY_MAX_CELLS,
+    full: bool = False,
 ):
     """Reconstruct the per-level label matrix — the reference's
     hierarchy CSV contract (Main.java:556-565: one line per significant
@@ -751,14 +771,7 @@ def hierarchy_levels(
     """
     clusters = result.clusters
     n = len(result.last_cluster)
-    levels = {
-        float(c.birth)
-        for c in clusters.values()
-        if c.label != 1 and not np.isnan(c.birth)
-    }
-    if full:
-        levels |= {float(w) for w in result.noise_level if w > 0}
-    births = sorted(levels, reverse=True)
+    births = sorted(hierarchy_level_set(result, full), reverse=True)
     if not births:
         return []
     if n * len(births) > max_cells:

@@ -230,7 +230,8 @@ def minhash_lsh_pairs(
     # checkpoint=True: buckets feeds BOTH join sides, whose subplans
     # differ, so Catalyst would re-execute the whole shingle-explode +
     # digest + min-agg pipeline (75M intermediate rows at 500k docs)
-    # per side — measured 4x the query (A/B in tools/minhash_ab.py).
+    # per side — measured 4x the query (A/B in SCALE.md's
+    # minhash_lsh_pairs row).
     buckets = band_buckets(
         sig, num_hashes, band_size, None, id_col, checkpoint=True
     )

@@ -321,8 +321,8 @@ def _lpt_bins(items: list, weights: dict, n_bins: int) -> dict:
 
 
 def _exact_edges_arrays(X, ids, min_pts: int, metric: str):
-    """One subset's exact MST edge arrays (the shared body of both
-    exact-leaf kernels)."""
+    """One subset's exact MST edge arrays (the per-subset body of the
+    binned exact-leaf kernel)."""
     uniq = np.unique(X, axis=0)
     grouped = len(uniq) < 0.7 * len(X)
     if grouped:
@@ -332,29 +332,6 @@ def _exact_edges_arrays(X, ids, min_pts: int, metric: str):
         core = hk.core_distances(X, min_pts, metric)
         src, dst, w = hk.mst_edges(X, core, metric, self_edges=True, ids=ids)
     return src, dst, w, len(uniq), grouped
-
-
-def _make_exact_edges_kernel(min_pts: int, metric: str):
-    profile = bool(os.environ.get("SPARK_GRAFT_PROFILE"))
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        t0 = time.time() if profile else 0.0
-        X = _features_matrix(pdf["features"])
-        ids = pdf["point_id"].to_numpy(np.int64)
-        src, dst, w, nuniq, grouped = _exact_edges_arrays(X, ids, min_pts, metric)
-        sid = np.full(len(src), int(pdf["subset_id"].iloc[0]), dtype=np.int64)
-        # only print sizeable kernels: at 6M points iteration 2 runs
-        # ~143k micro-subset kernels and per-call prints would swamp
-        # stderr AND skew the very stage being profiled
-        if profile and len(ids) >= 512:
-            print(
-                f"##k exact pid={os.getpid()} t0={t0:.3f} n={len(ids)}"
-                f" uniq={nuniq} grouped={grouped} {time.time() - t0:.3f}s",
-                file=sys.stderr,
-            )
-        return pd.DataFrame({"subset_id": sid, "src": src, "dst": dst, "weight": w})
-
-    return kernel
 
 
 def _make_exact_edges_kernel_binned(min_pts: int, metric: str):
@@ -451,7 +428,7 @@ class MRHDBSCANModel:
     n_iterations: int = 0
     _hier = None  # (HierarchyResult, verts) for hierarchy_levels()
     _membership = None  # contracted mode: DataFrame(point_id, rep_id, core)
-    _levels_mode = "exact"  # "recursive": level matrix via hierarchy_at
+    _levels_mode = "exact"  # "recursive": hierarchy_at replays _l2
     _spark = None
     _fit_params = None  # {"min_pts", "metric"} — predict()'s defaults
     _predict_reference = None  # persisted (features+label+core+levels)
@@ -464,99 +441,67 @@ class MRHDBSCANModel:
     def hierarchy_levels(self, full: bool = False) -> DataFrame:
         """Per-level label matrix as rows (level_weight, point_id,
         label) — the reference's hierarchy CSV contract
-        (Main.java:556-565). ``full=True`` adds the noise levels (the
-        reference's default non-compact hierarchy); default is the
-        compact one (cluster birth levels only). Driver cost is
-        O(retained·levels); in contracted mode the per-point expansion
-        happens in a distributed broadcast join (contracted members
-        share their representative's trajectory exactly — see
-        contract_kernel). Under RECURSIVE contraction (>2M-point
-        fits) the same contract is served by delegating to the
-        batched ``hierarchy_at`` over the writer's level set (round
-        11; the round-9 refusal is closed) — identical rows, long
-        format either way."""
+        (Main.java:556-565). The compact default holds the cluster
+        birth levels; ``full=True`` adds every level where a point
+        turns noise (the reference's default non-compact hierarchy).
+        Served in every mode by ``hierarchy_at`` over that level set,
+        whose label rule is ``hk.hierarchy_levels``' row for row. The
+        driver holds only the level list. Outside recursive mode the
+        matrix is refused past 50M cells (retained vertices × levels),
+        the documented limit of the level writer."""
         if self._hier is None:
             raise ValueError("hierarchy retention disabled")
-        if self._levels_mode == "recursive":
-            # Round 11 (closes the round-9 refusal): chain-coalesced
-            # chunk members do not share their representative's full
-            # level trajectory, so the matrix cannot be read off the
-            # level-2 reduction directly — but hierarchy_at([e1..ek])
-            # replays ANY set of levels exactly from the durable
-            # pieces (one bounded label pass per level + two joins
-            # total). Delegate to it over the writer's own level set:
-            # compact = distinct cluster birth levels (identical
-            # derivation to hk.hierarchy_levels); full additionally
-            # includes every distinct member noise gate — the exact
-            # detach weights _l2 carries, NaN inheriting the chunk's
-            # reduced-graph noise level, which together ARE the
-            # level-1 noise levels the non-recursive writer uses
-            # (differential-pinned by test_recursive). The driver
-            # holds only the level list; the n×levels expansion stays
-            # a distributed long-format frame.
-            res, verts = self._hier
-            levels = {
-                float(c.birth)
-                for c in res.clusters.values()
-                if c.label != 1 and not np.isnan(c.birth)
-            }
-            if full:
-                import pyarrow as pa
-
-                nl_df = self._spark.createDataFrame(
-                    pa.table(
-                        {
-                            "rep2": pa.array(
-                                np.asarray(verts, np.int64), pa.int64()
-                            ),
-                            "__nl": pa.array(
-                                np.asarray(res.noise_level, np.float64),
-                                pa.float64(),
-                            ),
-                        }
-                    )
-                )
-                gate = F.when(
-                    F.col("detach").isNull() | F.isnan("detach"), F.col("__nl")
-                ).otherwise(F.col("detach"))
-                # bounded collect: one row per DISTINCT level — the
-                # same cardinality the level writer emits rows for
-                levels |= {
-                    float(r["__g"])
-                    for r in self._l2.join(F.broadcast(nl_df), on="rep2")
-                    .select(gate.alias("__g"))
-                    .filter(F.col("__g") > 0)
-                    .distinct()
-                    .collect()
-                }
-            if not levels:
-                return self._spark.createDataFrame(
-                    [], schema="level_weight double, point_id long, label long"
-                )
-            return self.hierarchy_at(sorted(levels))
         res, verts = self._hier
-        levels = hk.hierarchy_levels(res, full=full)
-        rows = []
-        for w, labels in levels:
-            for p, lbl in zip(verts, labels):
-                rows.append((float(w), int(p), int(lbl)))
-        if self._membership is None:
-            return self._spark.createDataFrame(
-                rows, schema="level_weight double, point_id long, label long"
+        recursive = self._levels_mode == "recursive"
+        levels = hk.hierarchy_level_set(res, full=full and not recursive)
+        if full and recursive:
+            import pyarrow as pa
+
+            # a level-1 representative turns noise at its exact detach
+            # weight, NaN inheriting its level-2 vertex's noise level —
+            # the gate hierarchy_at applies; together these ARE the
+            # level-1 noise levels of the non-recursive writer.
+            # Bounded collect: one row per distinct level.
+            nl_df = self._spark.createDataFrame(
+                pa.table(
+                    {
+                        "rep2": pa.array(np.asarray(verts, np.int64), pa.int64()),
+                        "__nl": pa.array(
+                            np.asarray(res.noise_level, np.float64), pa.float64()
+                        ),
+                    }
+                )
             )
-        rep_levels = self._spark.createDataFrame(
-            rows, schema="level_weight double, rep_id long, label long"
-        )
-        return self._membership.join(
-            F.broadcast(rep_levels), on="rep_id"
-        ).select("level_weight", "point_id", "label")
+            gate = F.when(
+                F.col("detach").isNull() | F.isnan("detach"), F.col("__nl")
+            ).otherwise(F.col("detach"))
+            levels |= {
+                float(r["__g"])
+                for r in self._l2.join(F.broadcast(nl_df), on="rep2")
+                .select(gate.alias("__g"))
+                .filter(F.col("__g") > 0)
+                .distinct()
+                .collect()
+            }
+        if not levels:
+            return self._spark.createDataFrame(
+                [], schema="level_weight double, point_id long, label long"
+            )
+        cells = len(verts) * len(levels)
+        if not recursive and cells > hk.HIERARCHY_MAX_CELLS:
+            raise ValueError(
+                f"hierarchy matrix would have {cells} cells "
+                f"(> {hk.HIERARCHY_MAX_CELLS}); query fewer levels with "
+                f"hierarchy_at"
+            )
+        return self.hierarchy_at(sorted(levels))
 
     def hierarchy_at(self, eps) -> DataFrame:
         """Per-point labels at one or more dendrogram levels — the
-        "cut the dendrogram at ε" query, WITHOUT the n×levels matrix,
-        and therefore available under recursive contraction where
-        ``hierarchy_levels`` refuses (round 9). ``eps`` is a single
-        distance or a sequence of them (round 10): a multi-level query
+        "cut the dendrogram at ε" query, WITHOUT the n×levels matrix
+        (``hierarchy_levels`` is this query over the matrix's level
+        set). ``eps`` is a single distance or a sequence of them
+        (round 10): a multi-level query
         replays the durable pieces ONCE — one driver-side label pass
         per level over the bounded reduced graph, ONE broadcast join
         and ONE membership join total, returning the levels in long
@@ -737,9 +682,9 @@ class MRHDBSCANModel:
         """Persist the model's four relations as parquet under
         ``path`` plus a one-row JSON meta (n_iterations, levels mode,
         fit params). Distributed writes — nothing is collected. The
-        hierarchy retention state (``hierarchy_levels``) is driver-side
-        and NOT persisted: a loaded model serves labels/tree/outliers/
-        MST; refit for the level matrix.
+        hierarchy retention state (``hierarchy_levels``/``hierarchy_at``)
+        is driver-side and NOT persisted: a loaded model serves labels/
+        tree/outliers/MST; refit for the hierarchy queries.
 
         ``fitted_points`` (point_id, features of the fitted data)
         additionally persists a PREDICTION REFERENCE so the loaded
@@ -924,7 +869,7 @@ class MRHDBSCANModel:
     def load(cls, spark, path: str) -> "MRHDBSCANModel":
         """Load a model persisted by :meth:`save`.
 
-        Warns at load time that the level-matrix writer is unavailable
+        Warns at load time that the hierarchy queries are unavailable
         (hierarchy retention is driver state and never persisted) so
         the limitation surfaces here, not at the first
         ``hierarchy_levels()`` call deep in a pipeline."""
@@ -952,16 +897,11 @@ class MRHDBSCANModel:
             model._predict_index_path = f"{path}/predict_index"
             kind = meta["predict_index"]
             model._predict_index_kind = kind if kind in ("ivf", "lsh") else "ivf"
-        reason = (
-            "it was fitted under recursive contraction"
-            if model._levels_mode == "recursive"
-            else "hierarchy retention is driver state and is not persisted"
-        )
         warnings.warn(
-            f"loaded model serves labels/cluster_tree/outlier_scores/"
-            f"mst_edges but NOT hierarchy_levels ({reason}); refit with "
-            f"MRHDBSCAN(recursive_contraction=False) for the level-matrix "
-            f"writer",
+            "loaded model serves labels/cluster_tree/outlier_scores/"
+            "mst_edges but NOT hierarchy_levels or hierarchy_at "
+            "(hierarchy retention is driver state and is not persisted); "
+            "refit for the hierarchy queries",
             UserWarning,
             stacklevel=2,
         )
@@ -990,8 +930,6 @@ class MRHDBSCAN:
         id_col: str = "point_id",
         global_mode: str = "contracted",
         dim: int | None = None,
-        coalesce_chains: bool = False,
-        auto_widen_samples: bool = True,
         recursive_contraction: bool | str = "auto",
         checkpoint_dir: str | None = None,
     ):
@@ -1005,17 +943,10 @@ class MRHDBSCAN:
         # hierarchy build — bounds the driver input to ~O(n/mcl +
         # cross-bin edges) instead of O(retained events) (SCALE.md
         # "distributed structure pass"). 'auto' enables it past
-        # _RECURSIVE_MIN_POINTS fitted points; constraints and
-        # coalesce_chains fall back to the single-level path.
+        # _RECURSIVE_MIN_POINTS fitted points; constraints fall back to
+        # the single-level path. The level-2 pass contracts with the
+        # chain-coalescing kernel (contract_kernel v2).
         self.recursive_contraction = recursive_contraction
-        # chain-coalescing contraction (contract_kernel v2): collapses
-        # runs of sub-mcl attachments along >=mcl spines into chunks
-        # with pre-aggregated stability credits — shrinks the driver's
-        # retained-event input by ~an order of magnitude at scale.
-        # Opt-in: stabilities drift by float re-grouping ulps vs the
-        # default path (allclose-differential-tested), and constraints
-        # fall back to the per-event kernel.
-        self.coalesce_chains = coalesce_chains
         self.min_pts = min_pts
         self.min_cluster_size = min_cluster_size
         self.sample_fraction = sample_fraction
@@ -1030,17 +961,6 @@ class MRHDBSCAN:
         # feature dimensionality; pass it to skip the one-row probe job
         # at the start of fit (useful when fit is called in a loop)
         self.dim = dim
-        # scale rule for the per-iteration sample width: a subset of c
-        # points must fan out into >= 2c/max_local_size bubbles or its
-        # children come back above the local cap and force another
-        # sampling round. With the flat user cap alone, a 6M-point
-        # iteration-0 subset sampled at 768 produced ~7.8k-point
-        # bubbles -> 143k-subset fragmentation at iteration 2 and a
-        # barely-contractible global graph (5.5M retained events).
-        # The floor is inert below max_samples_per_subset·max_local_size/2
-        # points (e.g. 1.57M at the 768/4096 bench config), so small-SF
-        # runs are bit-identical with it on or off.
-        self.auto_widen_samples = auto_widen_samples
         # Durable iteration state (SCALE.md "iteration state" row): by
         # default the fit loop cuts lineage with localCheckpoint(),
         # which dies with an executor. With checkpoint_dir set, every
@@ -1124,8 +1044,6 @@ class MRHDBSCAN:
                 "seed": self.seed,
                 "max_iterations": self.max_iterations,
                 "global_mode": self.global_mode,
-                "coalesce_chains": self.coalesce_chains,
-                "auto_widen_samples": self.auto_widen_samples,
                 "recursive_contraction": self.recursive_contraction,
                 # presence only (pair content is not hashed): a
                 # constraints run and a non-constraints run must never
@@ -1362,10 +1280,18 @@ class MRHDBSCAN:
                 self.sample_fraction,
                 seed=self.seed + iteration,
                 max_per_key=min(self.max_samples_per_subset, self.max_local_size),
-                min_ratio=(
-                    2.0 / self.max_local_size if self.auto_widen_samples else None
-                ),
-                ratio_cap=self.max_local_size if self.auto_widen_samples else None,
+                # scale rule for the sample width: a subset of c points
+                # must fan out into >= 2c/max_local_size bubbles or its
+                # children come back above the local cap and force
+                # another sampling round. With the flat user cap alone,
+                # a 6M-point iteration-0 subset sampled at 768 produced
+                # ~7.8k-point bubbles -> 143k-subset fragmentation at
+                # iteration 2 and a barely-contractible global graph
+                # (5.5M retained events). The floor is inert below
+                # max_samples_per_subset·max_local_size/2 points (e.g.
+                # 1.57M at the 768/4096 bench config).
+                min_ratio=2.0 / self.max_local_size,
+                ratio_cap=self.max_local_size,
                 counts=counts_df,
             )
             # driver-bounded sample collect (the reference ships samples
@@ -1453,19 +1379,14 @@ class MRHDBSCAN:
             )
             # relabel has one row per BUBBLE (>> len(mapping), which
             # counts new SUBSETS) — bound it by the per-subset sample
-            # cap the sampler enforces (auto_widen can raise the flat
-            # cap up to max_local_size) so the broadcast hint is gated
-            # on what is actually shipped
-            per_subset_cap = (
-                self.max_local_size
-                if self.auto_widen_samples
-                else min(self.max_samples_per_subset, self.max_local_size)
-            )
+            # cap the sampler enforces (the width floor can raise the
+            # flat cap up to max_local_size) so the broadcast hint is
+            # gated on what is actually shipped
             relabel = _relabel_join(
                 bubble_labels,
                 map_df,
                 len(mapping),
-                n_bubbles_max=len(big) * per_subset_cap,
+                n_bubbles_max=len(big) * self.max_local_size,
             )
             current = _cut(
                 assigned.join(relabel, on=["subset_id", "bubble_id"]).select(
@@ -1551,26 +1472,14 @@ class MRHDBSCAN:
                     self.recursive_contraction == "auto"
                     and sum(leaf_size.values()) >= _RECURSIVE_MIN_POINTS
                 )
-            ) and constr is None and not self.coalesce_chains and cross_edges is not None
-            if (
-                self.recursive_contraction is True
-                and not use_recursive
-                and (constr is not None or self.coalesce_chains)
-            ):
+            ) and constr is None and cross_edges is not None
+            if self.recursive_contraction is True and constr is not None:
                 import warnings
 
-                blockers = [
-                    b
-                    for b, on in (
-                        ("constraints", constr is not None),
-                        ("coalesce_chains", bool(self.coalesce_chains)),
-                    )
-                    if on
-                ]
                 warnings.warn(
                     "recursive_contraction=True downgraded to the "
                     "single-level contraction: the recursive pass does "
-                    f"not support {'/'.join(blockers)}",
+                    "not support constraints",
                     RuntimeWarning,
                     stacklevel=3,
                 )
@@ -1678,10 +1587,8 @@ class MRHDBSCAN:
         broadcast join against the distributed membership relation —
         no O(n) collect anywhere."""
         from bubbles.kernels.contract_kernel import (
-            CONTRACT2_SCHEMA,
             CONTRACT_SCHEMA,
             make_contract_kernel,
-            make_contract_kernel_v2,
         )
 
         if cross_edges is not None:
@@ -1689,20 +1596,12 @@ class MRHDBSCAN:
             cpdf = cross_edges.toArrow().to_pandas()
         else:
             cpdf = pd.DataFrame({"src": [], "dst": [], "weight": []})
-        # constraints need per-event retained vertices for endpoint
-        # mapping — the coalescing path falls back to the v1 kernel
-        coalesce = self.coalesce_chains and not constraints
         boundary = frozenset(map(int, cpdf["src"])) | frozenset(
             map(int, cpdf["dst"])
         )
         bc = spark.sparkContext.broadcast(boundary)
         par = spark.sparkContext.defaultParallelism
         width = 2 * (par if n_subsets is None else min(par, max(1, n_subsets)))
-        kernel = (
-            make_contract_kernel_v2(bc, self.min_cluster_size)
-            if coalesce
-            else make_contract_kernel(bc, self.min_cluster_size)
-        )
         phase1 = (
             # explicit width pin for the same reason as the leaf-kernel
             # stage: the contraction replay is CPU-bound per subset and
@@ -1712,22 +1611,17 @@ class MRHDBSCAN:
             leaf_edges.repartition(width, "subset_id")
             .groupBy("subset_id")
             .applyInPandas(
-                kernel,
-                schema=CONTRACT2_SCHEMA if coalesce else CONTRACT_SCHEMA,
+                make_contract_kernel(bc, self.min_cluster_size),
+                schema=CONTRACT_SCHEMA,
             )
         )
         phase1 = _cut_or_local(phase1, "global_contract", cut)
         tick("global contract checkpoint")
-        member_cols = [
+        membership = phase1.filter(F.col("kind") == 0).select(
             F.col("a").alias("point_id"),
             F.col("b").alias("rep_id"),
             F.col("w").alias("core_distance"),
-        ]
-        if coalesce:
-            # per-point detach weight (NaN = inherits the
-            # representative's driver-assigned noise level)
-            member_cols.append(F.col("w2").alias("detach"))
-        membership = phase1.filter(F.col("kind") == 0).select(*member_cols)
+        )
         # Arrow collect: the reduced-event relation is the one driver
         # materialization that scales with retained events (5.5M rows
         # at 6M points / mcl=2000) — row-pickle collect measured 45 s
@@ -1761,13 +1655,6 @@ class MRHDBSCAN:
         vw[np.searchsorted(verts, v2["a"].to_numpy(np.int64))] = v2[
             "w"
         ].to_numpy(np.float64)
-        vertex_credit = None
-        k3 = red[red["kind"] == 3] if coalesce else red.iloc[0:0]
-        if coalesce and len(k3):
-            vertex_credit = np.full(len(verts), np.nan)
-            vertex_credit[
-                np.searchsorted(verts, k3["a"].to_numpy(np.int64))
-            ] = k3["w"].to_numpy(np.float64)
 
         local_constraints = None
         if constraints:
@@ -1796,7 +1683,6 @@ class MRHDBSCAN:
             vw,
             self.min_cluster_size,
             constraints=local_constraints,
-            vertex_credit=vertex_credit,
         )
         tick(f"global hierarchy ({len(verts)} verts)")
         min_death = hk.cluster_min_death(res)
@@ -1832,23 +1718,12 @@ class MRHDBSCAN:
         labels_df = joined.select("point_id", "label")
         # GLOSH (HDBSCANStar.java:653-686): contracted members share
         # their representative's noise level and deepest cluster
-        # exactly. Chain-coalesced members (coalesce_chains=True) share
-        # the chunk's flat label and eps_max — exact because chunks
-        # live inside PURE subtrees where no global event can land
-        # inside their span (contract_kernel v2 docstring) — but carry
-        # their TRUE per-point detach weight as the noise level.
-        if coalesce:
-            nl = F.when(
-                F.isnan("detach") | F.col("detach").isNull(),
-                F.col("noise_level"),
-            ).otherwise(F.col("detach"))
-        else:
-            nl = F.col("noise_level")
+        # exactly.
         scores_df = joined.select(
             "point_id",
             F.when(
-                nl > 0,
-                F.lit(1.0) - F.col("eps_max") / nl,
+                F.col("noise_level") > 0,
+                F.lit(1.0) - F.col("eps_max") / F.col("noise_level"),
             )
             .otherwise(F.lit(0.0))
             .alias("score"),
@@ -1972,11 +1847,10 @@ class MRHDBSCAN:
         src_sub = cpdf["src"].map(sub_map)
         dst_sub = cpdf["dst"].map(sub_map)
         known = src_sub.notna() & dst_sub.notna()
-        n_bins_target = int(os.environ.get("SPARK_GRAFT_L2_BINS", "0")) or 2 * par
         leaf_bin, n_bins = _genealogy_bins(
             parent_of,
             leaf_size,
-            n_bins_target,
+            2 * par,
             affinity=list(
                 zip(
                     src_sub[known].astype(np.int64),
@@ -2148,8 +2022,8 @@ class MRHDBSCAN:
         )
         model._hier = (res, verts)
         # point -> level-2 representative composition (kept for model
-        # introspection; the level-matrix writer itself is refused —
-        # see hierarchy_levels' recursive-mode contract)
+        # introspection; the hierarchy queries replay from the two
+        # pieces below instead)
         model._membership = membership.join(
             m2.select("rep_id", "rep2"), on="rep_id"
         ).select("point_id", F.col("rep2").alias("rep_id"), "core_distance")

@@ -1,7 +1,7 @@
 """Chain-coalescing contraction (contract_kernel v2) differentials.
 
-v2 (MRHDBSCAN(coalesce_chains=True)) coalesces runs of pure sub-mcl
-attachments along PURE locally->=mcl spines (no cross-edge endpoint
+v2 (MRHDBSCAN's recursive level-2 pass) coalesces runs of pure
+sub-mcl attachments along PURE locally->=mcl spines (no cross-edge endpoint
 anywhere in the subtree — the exactness condition) into chunks
 carrying stability credits (kind 3) and per-point detach weights
 (kind 0 w2). Its contract vs the per-event v1 kernel and the raw
@@ -14,8 +14,7 @@ hierarchy:
   at the event, which the kernel checks locally)
 - cluster tree shape (birth, n_points, death): exactly equal
 - stabilities: allclose (credit pre-aggregation regroups the float
-  sum Σ m_i/w_i, so bit-equality is NOT the contract — that is why
-  the mode is opt-in)
+  sum Σ m_i/w_i, so bit-equality is NOT the contract)
 - retained rows: strictly fewer on spine-heavy inputs (the point)
 """
 
@@ -218,108 +217,3 @@ def test_v2_single_point_subset():
     # one vertex-weight row, one self edge, one membership row
     assert list(k) == [2, 1, 0]
     assert a[2] == 5 and b[2] == 5  # membership: itself
-
-
-# --- end-to-end: MRHDBSCAN(coalesce_chains=True) vs default ---------------
-
-from bubbles.plans.mrhdbscan import MRHDBSCAN  # noqa: E402
-from tests.test_contracted import (  # noqa: E402
-    _assert_equivalent,
-    _blobs,
-    _lattice,
-    to_df,
-)
-
-
-def _fit_pair(spark, X, **kw):
-    params = dict(
-        min_pts=4, min_cluster_size=5, max_local_size=64,
-        max_samples_per_subset=16, seed=11,
-    )
-    params.update(kw)
-    df = to_df(spark, X)
-    m_v1 = MRHDBSCAN(global_mode="contracted", **params).fit(df)
-    m_v2 = MRHDBSCAN(
-        global_mode="contracted", coalesce_chains=True, **params
-    ).fit(df)
-    assert m_v1.n_iterations == m_v2.n_iterations
-    return m_v1, m_v2
-
-
-def test_fit_coalesce_matches_default_recursive(spark):
-    m_v1, m_v2 = _fit_pair(spark, _blobs(n=420, seed=7))
-    _assert_equivalent(m_v1, m_v2)
-
-
-def test_fit_coalesce_matches_default_long_spine(spark):
-    # one dense blob + sparse halo, mcl << n: the noise halo dribbles
-    # onto a long >=mcl spine — the regime v2 coalesces
-    rng = np.random.default_rng(23)
-    X = np.vstack(
-        [rng.normal(0, 0.8, (300, 2)), rng.uniform(-8, 8, (120, 2))]
-    )
-    m_v1, m_v2 = _fit_pair(
-        spark, X, min_cluster_size=40, max_local_size=512,
-        max_samples_per_subset=64,
-    )
-    _assert_equivalent(m_v1, m_v2)
-
-
-def test_fit_coalesce_matches_default_lattice(spark):
-    # duplicate-heavy integer lattice: 0-weight edges + tie groups
-    m_v1, m_v2 = _fit_pair(spark, _lattice(seed=3))
-    _assert_equivalent(m_v1, m_v2)
-
-
-def test_fit_coalesce_constraints_falls_back(spark):
-    # constraints force the per-event kernel — results must equal the
-    # default path bit-for-bit (same kernel underneath)
-    X = _blobs(n=300, seed=9)
-    df_c = None
-    from pyspark.sql import SparkSession  # noqa: F401
-
-    df = to_df(spark, X)
-    constraints = spark.createDataFrame(
-        [(0, 1, "ml"), (2, 200, "cl")],
-        schema="point_a long, point_b long, kind string",
-    )
-    params = dict(
-        min_pts=4, min_cluster_size=5, max_local_size=64,
-        max_samples_per_subset=16, seed=11,
-    )
-    m_v1 = MRHDBSCAN(global_mode="contracted", **params).fit(
-        df, constraints=constraints
-    )
-    m_v2 = MRHDBSCAN(
-        global_mode="contracted", coalesce_chains=True, **params
-    ).fit(df, constraints=constraints)
-    _assert_equivalent(m_v1, m_v2)
-
-
-def test_fit_coalesce_hierarchy_levels_match(spark):
-    # compact-mode per-level label matrix must be identical between the
-    # default and coalescing paths: levels are cluster birth weights
-    # (structural events), and chunks never straddle one — every chunk
-    # member shares its representative's label at every listed level
-    rng = np.random.default_rng(31)
-    X = np.vstack(
-        [rng.normal(0, 0.8, (260, 2)), rng.uniform(-8, 8, (100, 2))]
-    )
-    m_v1, m_v2 = _fit_pair(
-        spark, X, min_cluster_size=30, max_local_size=256,
-        max_samples_per_subset=48,
-    )
-    lv1 = {
-        (round(float(r["level_weight"]), 9), int(r["point_id"])): int(r["label"])
-        for r in m_v1.hierarchy_levels().collect()
-    }
-    lv2 = {
-        (round(float(r["level_weight"]), 9), int(r["point_id"])): int(r["label"])
-        for r in m_v2.hierarchy_levels().collect()
-    }
-    assert set(lv1) == set(lv2)
-    fwd: dict = {}
-    for key, l1 in lv1.items():
-        l2 = lv2[key]
-        assert (l1 == 0) == (l2 == 0)
-        assert fwd.setdefault((key[0], l1), l2) == l2

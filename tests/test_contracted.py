@@ -130,24 +130,46 @@ def test_contracted_matches_driver_with_constraints(spark):
     _assert_equivalent(m_drv, m_con)
 
 
+def _writer_rows(model, full):
+    """The per-level label matrix as the reference writer emits it:
+    ``hk.hierarchy_levels`` over the retained vertices, expanded to
+    points through the contraction membership (identity without)."""
+    res, verts = model._hier
+    if model._membership is None:
+        members = {int(v): [int(v)] for v in verts}
+    else:
+        members: dict = {}
+        for r in model._membership.collect():
+            members.setdefault(int(r["rep_id"]), []).append(int(r["point_id"]))
+    return sorted(
+        (float(w), p, int(lbl))
+        for w, labels in hk.hierarchy_levels(res, full=full)
+        for v, lbl in zip(verts, labels)
+        for p in members.get(int(v), [])
+    )
+
+
 def test_contracted_hierarchy_levels_match(spark):
     m_drv, m_con = _fit_both(spark, _blobs(n=180), max_local_size=48)
-    lv_d = {
-        (round(float(r["level_weight"]), 9), int(r["point_id"])): int(r["label"])
-        for r in m_drv.hierarchy_levels().collect()
-    }
-    lv_c = {
-        (round(float(r["level_weight"]), 9), int(r["point_id"])): int(r["label"])
-        for r in m_con.hierarchy_levels().collect()
-    }
-    assert set(lv_d) == set(lv_c)
-    fwd: dict = {}
-    for key, ld in lv_d.items():
-        lc = lv_c[key]
-        assert (ld == 0) == (lc == 0)
-        # per-level bijection (label numbering may differ between paths)
-        w = key[0]
-        assert fwd.setdefault((w, ld), lc) == lc
+    for full in (False, True):
+        rows = {}
+        for name, m in (("driver", m_drv), ("contracted", m_con)):
+            rows[name] = sorted(
+                (float(r["level_weight"]), int(r["point_id"]), int(r["label"]))
+                for r in m.hierarchy_levels(full).collect()
+            )
+            # exactly the writer's matrix: a dropped level or label fails
+            assert rows[name] and rows[name] == _writer_rows(m, full), (name, full)
+        lv_d = {(round(w, 9), p): lbl for w, p, lbl in rows["driver"]}
+        lv_c = {(round(w, 9), p): lbl for w, p, lbl in rows["contracted"]}
+        assert set(lv_d) == set(lv_c)
+        fwd: dict = {}
+        for key, ld in lv_d.items():
+            lc = lv_c[key]
+            assert (ld == 0) == (lc == 0)
+            # per-level bijection (label numbering may differ between paths)
+            w = key[0]
+            assert fwd.setdefault((w, ld), lc) == lc
 
 
 def test_contract_kernel_randomized_differential():

@@ -96,7 +96,6 @@ def main():
 
     import os
 
-    coalesce = bool(os.environ.get("SPARK_GRAFT_COALESCE"))
     # SPARK_GRAFT_RECURSIVE: "0" forces the single-level contraction
     # (A/B baseline), "1" forces level 2, unset = the shipping "auto"
     rec_env = os.environ.get("SPARK_GRAFT_RECURSIVE")
@@ -111,7 +110,6 @@ def main():
             max_samples_per_subset=768,
             seed=42,
             dim=4,
-            coalesce_chains=coalesce,
             recursive_contraction=recursive,
         ).fit(pts)
         return model.labels.count(), model.n_iterations
@@ -142,9 +140,11 @@ def main():
             merged = json.load(f)
     except FileNotFoundError:
         merged = {}
-    key = "mrhdbscan_lineitem_coalesce" if coalesce else "mrhdbscan_lineitem"
-    if recursive is False:
-        key = "mrhdbscan_lineitem_singlelevel"
+    key = (
+        "mrhdbscan_lineitem_singlelevel"
+        if recursive is False
+        else "mrhdbscan_lineitem"
+    )
     merged.setdefault(key, {}).update(results)
     with open("SCALEBENCH.json", "w") as f:
         json.dump(merged, f, indent=1)

@@ -20,6 +20,20 @@ sys.path.insert(0, ".")
 DEFAULT_PATH = "/root/reference/数据集/Skin_NonSkin.txt"
 
 
+def ari_singleton_noise(labels, truth):
+    """ARI with noise (label 0) expanded to one singleton group per
+    point, per the paper's protocol."""
+    import numpy as np
+
+    from tests.test_kernel import ari
+
+    labels = np.asarray(labels).copy()
+    noise = labels == 0
+    # unique negative ids -> every noise point its own cluster
+    labels[noise] = -(np.arange(1, int(noise.sum()) + 1))
+    return ari(labels, truth)
+
+
 def main():
     path = sys.argv[1] if len(sys.argv) > 1 else DEFAULT_PATH
     out = sys.argv[2] if len(sys.argv) > 2 else None
@@ -52,9 +66,9 @@ def main():
     ).localCheckpoint()
 
     # round-6 chosen config. mpts/mcs from the round-5 sweep
-    # (tools/skin_sweep.py); sample_fraction raised 0.2 -> 0.5 after
-    # the seed-42 diagnosis (tools/skin_diag.py + tools/skin_seeds.py,
-    # QUALITY_r6): at k=0.2 some bubble samples open a density dip
+    # (QUALITY_r5.json "skin_sweep_grid"); sample_fraction raised
+    # 0.2 -> 0.5 after the seed-42 diagnosis (QUALITY_r6.json
+    # "seed42_diagnosis" and "skin_seed_stability"): at k=0.2 some bubble samples open a density dip
     # inside the nonskin class that EOM decisively selects (3-4
     # clusters, ARI 0.24-0.40 on 3/10 seeds; contracted == driver
     # oracle, so the engine is exact — it's sampling variance). At
@@ -80,8 +94,6 @@ def main():
     labels = joined["label"].to_numpy()
     truth = joined["true_label"].to_numpy()
     import numpy as np
-
-    from tools.skin_sweep import ari_singleton_noise
 
     result = {
         "dataset": "Skin_NonSkin",
