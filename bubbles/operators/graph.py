@@ -161,7 +161,7 @@ def triangle_count(
     # oriented relation is slim and its re-derivation is two equi
     # joins), so the lazy shape stays.
     # NOTE (round 12): two single-plan restructures were built, measured
-    # and REVERTED (plans/r12/triangle_count_*, OPTIMIZATION_r12.md):
+    # and REVERTED (plans/r12/triangle_count_*; VERDICT.md round-12 audit):
     # (a) full window shape — degrees from a count window over exploded
     # endpoints + wedges from per-lo sorted adjacency arrays + closure
     # as marker rows under a min-over-(x,y) window: 2 scans / 6

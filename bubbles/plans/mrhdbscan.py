@@ -18,7 +18,8 @@ Per-iteration dataflow (all DataFrame ops; kernels only inside
 
 The loop re-checkpoints per pass (the reference's object files,
 S3/S4) and the final hierarchy is built once on the driver from the
-merged edge relation (replacing the broken Stage D loop, bug B7).
+contracted merged edge relation (replacing the broken Stage D loop,
+bug B7).
 
 Termination guard the reference lacks: a subset that fails to shrink
 twice is processed exactly regardless of size.
@@ -427,7 +428,7 @@ class MRHDBSCANModel:
     mst_edges: DataFrame  # (src, dst, weight) incl. self edges
     n_iterations: int = 0
     _hier = None  # (HierarchyResult, verts) for hierarchy_levels()
-    _membership = None  # contracted mode: DataFrame(point_id, rep_id, core)
+    _membership = None  # DataFrame(point_id, rep_id, core_distance)
     _levels_mode = "exact"  # "recursive": hierarchy_at replays _l2
     _spark = None
     _fit_params = None  # {"min_pts", "metric"} — predict()'s defaults
@@ -472,13 +473,12 @@ class MRHDBSCANModel:
                     }
                 )
             )
-            gate = F.when(
-                F.col("detach").isNull() | F.isnan("detach"), F.col("__nl")
-            ).otherwise(F.col("detach"))
             levels |= {
                 float(r["__g"])
-                for r in self._l2.join(F.broadcast(nl_df), on="rep2")
-                .select(gate.alias("__g"))
+                for r in self._l2.join(
+                    _broadcast_if_small(self._spark, nl_df, len(verts)), on="rep2"
+                )
+                .select(_detach_gate("__nl").alias("__g"))
                 .filter(F.col("__g") > 0)
                 .distinct()
                 .collect()
@@ -503,8 +503,9 @@ class MRHDBSCANModel:
         set). ``eps`` is a single distance or a sequence of them
         (round 10): a multi-level query
         replays the durable pieces ONCE — one driver-side label pass
-        per level over the bounded reduced graph, ONE broadcast join
-        and ONE membership join total, returning the levels in long
+        per level over the bounded reduced graph, ONE level-frame join
+        (broadcast under ``_broadcast_cap``) and ONE membership join
+        total, returning the levels in long
         format — instead of re-walking the membership relation per
         level (the practical way to ask for k cuts at >2M points).
         Duplicate levels are collapsed. Returns (level_weight,
@@ -538,9 +539,9 @@ class MRHDBSCANModel:
         nv = len(verts)
         v64 = np.asarray(verts, np.int64)
         if self._levels_mode == "recursive":
-            # one bounded label pass per level, ONE long broadcast
-            # frame (k·|reduced graph| rows), then the two durable
-            # joins exactly once for all k levels
+            # one bounded label pass per level, ONE long level frame
+            # (k·|reduced graph| rows, broadcast under _broadcast_cap),
+            # then the two durable joins exactly once for all k levels
             lab_cols = [
                 hk.labels_at_level(res, e, apply_noise=False).astype(np.int64)
                 for e in eps_list
@@ -563,13 +564,13 @@ class MRHDBSCANModel:
                     }
                 )
             )
-            gate = F.when(
-                F.col("detach").isNull() | F.isnan("detach"), F.col("__nl")
-            ).otherwise(F.col("detach"))
-            rep1 = self._l2.join(F.broadcast(rep_df), on="rep2").select(
+            rep1 = self._l2.join(
+                _broadcast_if_small(self._spark, rep_df, len(eps_list) * nv),
+                on="rep2",
+            ).select(
                 "rep_id",
                 "level_weight",
-                F.when(gate > F.col("level_weight"), F.lit(0))
+                F.when(_detach_gate("__nl") > F.col("level_weight"), F.lit(0))
                 .otherwise(F.col("label"))
                 .alias("label"),
             )
@@ -592,13 +593,10 @@ class MRHDBSCANModel:
                 }
             )
         )
-        if self._membership is None:
-            return rep_df.select(
-                "level_weight", F.col("rep_id").alias("point_id"), "label"
-            )
-        return self._membership.join(F.broadcast(rep_df), on="rep_id").select(
-            "level_weight", "point_id", "label"
-        )
+        return self._membership.join(
+            _broadcast_if_small(self._spark, rep_df, len(eps_list) * nv),
+            on="rep_id",
+        ).select("level_weight", "point_id", "label")
 
     def predict(
         self,
@@ -928,13 +926,10 @@ class MRHDBSCAN:
         max_iterations: int = 20,
         features_col: str = "features",
         id_col: str = "point_id",
-        global_mode: str = "contracted",
         dim: int | None = None,
         recursive_contraction: bool | str = "auto",
         checkpoint_dir: str | None = None,
     ):
-        if global_mode not in ("driver", "contracted"):
-            raise ValueError("global_mode must be 'driver' or 'contracted'")
         if recursive_contraction not in (True, False, "auto"):
             raise ValueError("recursive_contraction must be True/False/'auto'")
         # recursive (level-2) contraction: re-contract the retained-
@@ -957,7 +952,6 @@ class MRHDBSCAN:
         self.max_iterations = max_iterations
         self.features_col = features_col
         self.id_col = id_col
-        self.global_mode = global_mode
         # feature dimensionality; pass it to skip the one-row probe job
         # at the start of fit (useful when fit is called in a loop)
         self.dim = dim
@@ -1043,7 +1037,6 @@ class MRHDBSCAN:
                 "distance": self.distance,
                 "seed": self.seed,
                 "max_iterations": self.max_iterations,
-                "global_mode": self.global_mode,
                 "recursive_contraction": self.recursive_contraction,
                 # presence only (pair content is not hashed): a
                 # constraints run and a non-constraints run must never
@@ -1465,106 +1458,47 @@ class MRHDBSCAN:
                 raise ValueError(
                     f"constraint kind must be 'ml' or 'cl', got {sorted(bad_kinds)}"
                 )
-        if self.global_mode == "contracted":
-            use_recursive = (
-                self.recursive_contraction is True
-                or (
-                    self.recursive_contraction == "auto"
-                    and sum(leaf_size.values()) >= _RECURSIVE_MIN_POINTS
-                )
-            ) and constr is None and cross_edges is not None
-            if self.recursive_contraction is True and constr is not None:
-                import warnings
+        use_recursive = (
+            self.recursive_contraction is True
+            or (
+                self.recursive_contraction == "auto"
+                and sum(leaf_size.values()) >= _RECURSIVE_MIN_POINTS
+            )
+        ) and constr is None and cross_edges is not None
+        if self.recursive_contraction is True and constr is not None:
+            import warnings
 
-                warnings.warn(
-                    "recursive_contraction=True downgraded to the "
-                    "single-level contraction: the recursive pass does "
-                    "not support constraints",
-                    RuntimeWarning,
-                    stacklevel=3,
-                )
-            if use_recursive:
-                return self._global_step_recursive(
-                    spark,
-                    leaf_edges,
-                    cross_edges,
-                    iteration,
-                    parent_of,
-                    leaf_size,
-                    tick=_tick,
-                    n_subsets=n_leaf_subsets,
-                    cut=_cut,
-                )
-            return self._global_step_contracted(
+            warnings.warn(
+                "recursive_contraction=True downgraded to the "
+                "single-level contraction: the recursive pass does "
+                "not support constraints",
+                RuntimeWarning,
+                stacklevel=3,
+            )
+        if cross_edges is not None:
+            cross_edges = cross_edges.drop("creator")
+        if use_recursive:
+            return self._global_step_recursive(
                 spark,
                 leaf_edges,
-                cross_edges.drop("creator") if cross_edges is not None else None,
+                cross_edges,
                 iteration,
-                constr,
+                parent_of,
+                leaf_size,
                 tick=_tick,
                 n_subsets=n_leaf_subsets,
                 cut=_cut,
             )
-        all_edges = leaf_edges.drop("subset_id")
-        if cross_edges is not None:
-            all_edges = all_edges.unionByName(cross_edges.drop("creator"))
-        return self._global_step(
-            spark, _cut(all_edges, "merged_all_edges"), iteration, constr
+        return self._global_step_contracted(
+            spark,
+            leaf_edges,
+            cross_edges,
+            iteration,
+            constr,
+            tick=_tick,
+            n_subsets=n_leaf_subsets,
+            cut=_cut,
         )
-
-    # ------------------------------------------------------------------
-    def _global_step(
-        self, spark, all_edges: DataFrame, iteration: int, constraints=None
-    ) -> MRHDBSCANModel:
-        """Stage C/D replacement: one driver-side bottom-up dendrogram
-        over the merged edge relation (paper §3.3.3 bottom-up option;
-        the reference's top-down loop is broken, bug B7)."""
-        # toArrow: exact long/double decode, independent of the caller
-        # session's arrow.pyspark.enabled (default false in Spark 4)
-        epdf = all_edges.toArrow().to_pandas()
-        src = epdf["src"].to_numpy(np.int64)
-        dst = epdf["dst"].to_numpy(np.int64)
-        w = epdf["weight"].to_numpy(np.float64)
-        verts = np.unique(np.concatenate([src, dst]))
-        idx = {int(g): i for i, g in enumerate(verts)}
-        lu = np.fromiter((idx[int(x)] for x in src), np.int64, len(src))
-        lv = np.fromiter((idx[int(x)] for x in dst), np.int64, len(dst))
-        local_constraints = None
-        if constraints:
-            local_constraints = [
-                (k, idx[int(a)], idx[int(b)])
-                for k, a, b in constraints
-                if int(a) in idx and int(b) in idx
-            ]
-        res = hk.build_hierarchy(
-            lu, lv, w, np.ones(len(verts)), self.min_cluster_size,
-            constraints=local_constraints,
-        )
-        # core distance per point = its self-edge weight (exact for
-        # points from the exact leaf path)
-        core = np.zeros(len(verts))
-        self_mask = lu == lv
-        core[lu[self_mask]] = w[self_mask]
-        scores = hk.glosh_scores(res, core)
-
-        labels_df = spark.createDataFrame(
-            pd.DataFrame({"point_id": verts, "label": res.labels.astype(np.int64)})
-        )
-        tree_df = _tree_df(spark, res)
-        scores_df = spark.createDataFrame(
-            pd.DataFrame({"point_id": verts, "score": scores, "core_distance": core})
-        )
-        model = MRHDBSCANModel(
-            labels=labels_df,
-            cluster_tree=tree_df,
-            outlier_scores=scores_df,
-            mst_edges=all_edges,
-            n_iterations=iteration,
-        )
-        model._hier = (res, verts)
-        model._spark = spark
-        model._fit_params = {"min_pts": self.min_pts, "metric": self.distance}
-        return model
 
     # ------------------------------------------------------------------
     def _global_step_contracted(
@@ -1583,9 +1517,9 @@ class MRHDBSCAN:
         源代码/main/Main.java:350-411): per-subset merge forests are
         contracted distributively (``contract_kernel``), the driver
         builds the hierarchy over retained events + cross edges only,
-        and per-point labels/noise/GLOSH come back through ONE
-        broadcast join against the distributed membership relation —
-        no O(n) collect anywhere."""
+        and per-point labels/noise/GLOSH come back through ONE join
+        (broadcast under ``_broadcast_cap``) against the distributed
+        membership relation — no O(n) collect anywhere."""
         from bubbles.kernels.contract_kernel import (
             CONTRACT_SCHEMA,
             make_contract_kernel,
@@ -1628,35 +1562,7 @@ class MRHDBSCAN:
         # vs ~5 s on the Arrow path
         red = phase1.filter(F.col("kind") > 0).toArrow().to_pandas()
         tick(f"global reduced collect ({len(red)} rows)")
-        e1 = red[red["kind"] == 1]
-        src = np.concatenate(
-            [e1["a"].to_numpy(np.int64), cpdf["src"].to_numpy(np.int64)]
-        )
-        dst = np.concatenate(
-            [e1["b"].to_numpy(np.int64), cpdf["dst"].to_numpy(np.int64)]
-        )
-        wts = np.concatenate(
-            [e1["w"].to_numpy(np.float64), cpdf["weight"].to_numpy(np.float64)]
-        )
-        # kind-2 vertex-weight rows can name vertices that touch no
-        # edge (an n=1 subset has a representative but no MST edge,
-        # degenerate-input KeyError otherwise); they must still exist
-        # in the hierarchy as isolated noise
-        v2_ids = red[red["kind"] == 2]["a"].to_numpy(np.int64)
-        verts = np.unique(np.concatenate([src, dst, v2_ids]))
-        # vectorized global-id -> local-index remap: verts is sorted
-        # and every endpoint is present, so searchsorted IS the lookup
-        # (the dict + per-element genexp it replaces was several
-        # seconds of driver CPU at 3M reduced edges / 1.5M verts)
-        lu = np.searchsorted(verts, src)
-        lv = np.searchsorted(verts, dst)
-        vw = np.ones(len(verts))
-        v2 = red[red["kind"] == 2]
-        vw[np.searchsorted(verts, v2["a"].to_numpy(np.int64))] = v2[
-            "w"
-        ].to_numpy(np.float64)
-
-        local_constraints = None
+        rep_constraints = None
         if constraints:
             cpoints = sorted(
                 {int(a) for _, a, _ in constraints} | {int(b) for _, _, b in constraints}
@@ -1667,83 +1573,26 @@ class MRHDBSCAN:
                     F.col("point_id").isin(cpoints)
                 ).collect()
             }
-            local_constraints = [
-                (
-                    k,
-                    int(np.searchsorted(verts, rep_of[int(a)])),
-                    int(np.searchsorted(verts, rep_of[int(b)])),
-                )
+            rep_constraints = [
+                (k, rep_of[int(a)], rep_of[int(b)])
                 for k, a, b in constraints
                 if int(a) in rep_of and int(b) in rep_of
             ]
-        res = hk.build_hierarchy(
-            lu,
-            lv,
-            wts,
-            vw,
+        res, verts = _reduced_hierarchy(
+            red,
+            cpdf["src"].to_numpy(np.int64),
+            cpdf["dst"].to_numpy(np.int64),
+            cpdf["weight"].to_numpy(np.float64),
             self.min_cluster_size,
-            constraints=local_constraints,
+            rep_constraints,
         )
         tick(f"global hierarchy ({len(verts)} verts)")
-        min_death = hk.cluster_min_death(res)
-        eps_max = np.fromiter(
-            (min_death[int(c)] for c in res.last_cluster), np.float64, len(verts)
+        reps = _broadcast_if_small(
+            spark, _rep_frame(spark, "rep_id", verts, res), len(verts)
         )
-        import pyarrow as pa
-
-        # ship via an Arrow table: createDataFrame(pandas) falls back to
-        # row pickling when the caller session leaves
-        # arrow.pyspark.enabled at its Spark-4 default (false) — at 6M
-        # points rep_df is millions of rows
-        rep_df = spark.createDataFrame(
-            pa.table(
-                {
-                    "rep_id": pa.array(verts, pa.int64()),
-                    "label": pa.array(res.labels.astype(np.int64), pa.int64()),
-                    "noise_level": pa.array(res.noise_level, pa.float64()),
-                    "eps_max": pa.array(eps_max, pa.float64()),
-                }
-            )
+        return self._model(
+            spark, membership, reps, res, verts, leaf_edges, cross_edges, iteration
         )
-        # broadcast only while the retained-vertex relation is actually
-        # small; past ~2M rows (≈80 MB) a broadcast stresses every
-        # executor's memory and a shuffle join is the right plan. In
-        # local mode the "broadcast" lives in the one shared JVM heap,
-        # so the cheap path stays cheap much longer.
-        is_local = spark.sparkContext.master.startswith("local")
-        bcast_cap = 8_000_000 if is_local else 2_000_000
-        if len(verts) <= bcast_cap:
-            rep_df = F.broadcast(rep_df)
-        joined = membership.join(rep_df, on="rep_id")
-        labels_df = joined.select("point_id", "label")
-        # GLOSH (HDBSCANStar.java:653-686): contracted members share
-        # their representative's noise level and deepest cluster
-        # exactly.
-        scores_df = joined.select(
-            "point_id",
-            F.when(
-                F.col("noise_level") > 0,
-                F.lit(1.0) - F.col("eps_max") / F.col("noise_level"),
-            )
-            .otherwise(F.lit(0.0))
-            .alias("score"),
-            "core_distance",
-        )
-        all_edges = leaf_edges.drop("subset_id")
-        if cross_edges is not None:
-            all_edges = all_edges.unionByName(cross_edges)
-        model = MRHDBSCANModel(
-            labels=labels_df,
-            cluster_tree=_tree_df(spark, res),
-            outlier_scores=scores_df,
-            mst_edges=all_edges,
-            n_iterations=iteration,
-        )
-        model._hier = (res, verts)
-        model._membership = membership
-        model._spark = spark
-        model._fit_params = {"min_pts": self.min_pts, "metric": self.distance}
-        return model
 
     # ------------------------------------------------------------------
     def _global_step_recursive(
@@ -1782,7 +1631,7 @@ class MRHDBSCAN:
 
         import pyarrow as pa
 
-        cpdf = cross_edges.toArrow().to_pandas()  # creator,src,dst,weight
+        cpdf = cross_edges.toArrow().to_pandas()  # src,dst,weight
         boundary1 = frozenset(map(int, cpdf["src"])) | frozenset(
             map(int, cpdf["dst"])
         )
@@ -1937,90 +1786,27 @@ class MRHDBSCAN:
         )
         red = phase2.filter(F.col("kind") > 0).toArrow().to_pandas()
         tick(f"global reduced collect ({len(red)} rows)")
-        e1 = red[red["kind"] == 1]
-        src = np.concatenate([e1["a"].to_numpy(np.int64), np.asarray(xsrc, np.int64)])
-        dst = np.concatenate([e1["b"].to_numpy(np.int64), np.asarray(xdst, np.int64)])
-        wts = np.concatenate([e1["w"].to_numpy(np.float64), np.asarray(xw, np.float64)])
-        v2 = red[red["kind"] == 2]
-        verts = np.unique(
-            np.concatenate([src, dst, v2["a"].to_numpy(np.int64)])
-        )
-        lu = np.searchsorted(verts, src)
-        lv = np.searchsorted(verts, dst)
-        vw = np.ones(len(verts))
-        vw[np.searchsorted(verts, v2["a"].to_numpy(np.int64))] = v2[
-            "w"
-        ].to_numpy(np.float64)
-        k3 = red[red["kind"] == 3]
-        vertex_credit = None
-        if len(k3):
-            vertex_credit = np.full(len(verts), np.nan)
-            vertex_credit[
-                np.searchsorted(verts, k3["a"].to_numpy(np.int64))
-            ] = k3["w"].to_numpy(np.float64)
-        res = hk.build_hierarchy(
-            lu, lv, wts, vw, self.min_cluster_size, vertex_credit=vertex_credit
-        )
+        res, verts = _reduced_hierarchy(red, xsrc, xdst, xw, self.min_cluster_size)
         tick(f"global hierarchy ({len(verts)} verts)")
-        min_death = hk.cluster_min_death(res)
-        eps_max = np.fromiter(
-            (min_death[int(c)] for c in res.last_cluster), np.float64, len(verts)
+        # per-rep1 relation: join the small level-2 table over the
+        # distributed level-1 membership; chunk members carry their
+        # true detach weight as the noise level (contract_kernel v2
+        # exactness contract)
+        rep2_df = _broadcast_if_small(
+            spark, _rep_frame(spark, "rep2", verts, res), len(verts)
         )
-
-        rep2_df = spark.createDataFrame(
-            pa.table(
-                {
-                    "rep2": pa.array(verts, pa.int64()),
-                    "label": pa.array(res.labels.astype(np.int64), pa.int64()),
-                    "noise_level": pa.array(res.noise_level, pa.float64()),
-                    "eps_max": pa.array(eps_max, pa.float64()),
-                }
-            )
-        )
-        # per-rep1 relation: broadcast-join the tiny level-2 table over
-        # the distributed level-1 membership — no shuffle; chunk
-        # members carry their true detach weight as the noise level
-        # (contract_kernel v2 exactness contract)
-        rep1_df = m2.join(F.broadcast(rep2_df), on="rep2").select(
+        rep1_df = m2.join(rep2_df, on="rep2").select(
             "rep_id",
             "label",
-            F.when(
-                F.isnan("detach") | F.col("detach").isNull(),
-                F.col("noise_level"),
-            )
-            .otherwise(F.col("detach"))
-            .alias("noise_level"),
+            _detach_gate("noise_level").alias("noise_level"),
             "eps_max",
         )
-        # same broadcast policy as the single-level path, sized by the
-        # level-1 retained-vertex count (cheap count on a checkpoint)
-        is_local = spark.sparkContext.master.startswith("local")
-        bcast_cap = 8_000_000 if is_local else 2_000_000
-        if m2.count() <= bcast_cap:
-            rep1_df = F.broadcast(rep1_df)
-        joined = membership.join(rep1_df, on="rep_id")
-        labels_df = joined.select("point_id", "label")
-        scores_df = joined.select(
-            "point_id",
-            F.when(
-                F.col("noise_level") > 0,
-                F.lit(1.0) - F.col("eps_max") / F.col("noise_level"),
-            )
-            .otherwise(F.lit(0.0))
-            .alias("score"),
-            "core_distance",
+        # sized by the level-1 retained-vertex count (cheap count on a
+        # checkpoint)
+        rep1_df = _broadcast_if_small(spark, rep1_df, m2.count())
+        model = self._model(
+            spark, membership, rep1_df, res, verts, leaf_edges, cross_edges, iteration
         )
-        all_edges = leaf_edges.drop("subset_id").unionByName(
-            cross_edges.drop("creator")
-        )
-        model = MRHDBSCANModel(
-            labels=labels_df,
-            cluster_tree=_tree_df(spark, res),
-            outlier_scores=scores_df,
-            mst_edges=all_edges,
-            n_iterations=iteration,
-        )
-        model._hier = (res, verts)
         # point -> level-2 representative composition (kept for model
         # introspection; the hierarchy queries replay from the two
         # pieces below instead)
@@ -2033,9 +1819,141 @@ class MRHDBSCAN:
         model._membership_l1 = membership
         model._l2 = m2.select("rep_id", "rep2", "detach")
         model._levels_mode = "recursive"
+        return model
+
+    def _model(
+        self, spark, membership, reps, res, verts, leaf_edges, cross_edges, iteration
+    ) -> MRHDBSCANModel:
+        """The tail both global steps share: per-point labels and GLOSH
+        through ONE join of the distributed membership (point_id,
+        rep_id, core_distance) with the per-representative ``reps``
+        (rep_id, label, noise_level, eps_max) — contracted members
+        share their representative's noise level and deepest cluster
+        exactly — plus the hierarchy retention state."""
+        joined = membership.join(reps, on="rep_id")
+        # GLOSH (HDBSCANStar.java:653-686): 1 - eps_max / noise level
+        scores_df = joined.select(
+            "point_id",
+            F.when(
+                F.col("noise_level") > 0,
+                F.lit(1.0) - F.col("eps_max") / F.col("noise_level"),
+            )
+            .otherwise(F.lit(0.0))
+            .alias("score"),
+            "core_distance",
+        )
+        # every mode stores the same leaf ∪ cross edge relation
+        all_edges = leaf_edges.drop("subset_id")
+        if cross_edges is not None:
+            all_edges = all_edges.unionByName(cross_edges)
+        model = MRHDBSCANModel(
+            labels=joined.select("point_id", "label"),
+            cluster_tree=_tree_df(spark, res),
+            outlier_scores=scores_df,
+            mst_edges=all_edges,
+            n_iterations=iteration,
+        )
+        model._hier = (res, verts)
+        model._membership = membership
         model._spark = spark
         model._fit_params = {"min_pts": self.min_pts, "metric": self.distance}
         return model
+
+
+def _broadcast_cap(master: str) -> int:
+    """Row count up to which a driver-built frame is joined with a
+    broadcast hint. Past ~2M rows (≈80 MB) a broadcast stresses every
+    executor's memory and a shuffle join is the right plan; in local
+    mode the "broadcast" lives in the one shared JVM heap, so the
+    cheap path stays cheap much longer."""
+    return 8_000_000 if master.startswith("local") else 2_000_000
+
+
+def _broadcast_if_small(spark, df: DataFrame, n_rows: int) -> DataFrame:
+    if n_rows <= _broadcast_cap(spark.sparkContext.master):
+        return F.broadcast(df)
+    return df
+
+
+def _detach_gate(noise_col: str):
+    """A level-1 representative's noise level under recursive
+    contraction: its exact detach weight, or — NaN/NULL detach — its
+    level-2 vertex's noise level ``noise_col``."""
+    return (
+        F.when(F.col("detach").isNull() | F.isnan("detach"), F.col(noise_col))
+        .otherwise(F.col("detach"))
+    )
+
+
+def _reduced_hierarchy(
+    red: pd.DataFrame, xsrc, xdst, xw, min_cluster_size, constraints=None
+):
+    """Driver hierarchy over a collected reduced relation plus the
+    cross edges routed straight to the driver. ``red`` rows: kind 1 =
+    edge (a, b, w); kind 2 = vertex a of mass w; kind 3 = vertex a's
+    pre-aggregated stability credit w (chain-coalesced vertices only).
+    ``constraints``: (kind, rep_a, rep_b) in representative ids.
+    Returns (HierarchyResult, verts), verts the sorted vertex ids."""
+    e1 = red[red["kind"] == 1]
+    src = np.concatenate([e1["a"].to_numpy(np.int64), np.asarray(xsrc, np.int64)])
+    dst = np.concatenate([e1["b"].to_numpy(np.int64), np.asarray(xdst, np.int64)])
+    wts = np.concatenate([e1["w"].to_numpy(np.float64), np.asarray(xw, np.float64)])
+    # kind-2 vertex-weight rows can name vertices that touch no edge
+    # (an n=1 subset has a representative but no MST edge); they must
+    # still exist in the hierarchy as isolated noise
+    v2 = red[red["kind"] == 2]
+    v2_ids = v2["a"].to_numpy(np.int64)
+    verts = np.unique(np.concatenate([src, dst, v2_ids]))
+    # vectorized global-id -> local-index remap: verts is sorted and
+    # every endpoint is present, so searchsorted IS the lookup (a dict
+    # + per-element genexp was several seconds of driver CPU at 3M
+    # reduced edges / 1.5M verts)
+    lu = np.searchsorted(verts, src)
+    lv = np.searchsorted(verts, dst)
+    vw = np.ones(len(verts))
+    vw[np.searchsorted(verts, v2_ids)] = v2["w"].to_numpy(np.float64)
+    k3 = red[red["kind"] == 3]
+    vertex_credit = None
+    if len(k3):
+        vertex_credit = np.full(len(verts), np.nan)
+        vertex_credit[
+            np.searchsorted(verts, k3["a"].to_numpy(np.int64))
+        ] = k3["w"].to_numpy(np.float64)
+    local_constraints = None
+    if constraints:
+        local_constraints = [
+            (k, int(np.searchsorted(verts, a)), int(np.searchsorted(verts, b)))
+            for k, a, b in constraints
+        ]
+    res = hk.build_hierarchy(
+        lu, lv, wts, vw, min_cluster_size,
+        constraints=local_constraints, vertex_credit=vertex_credit,
+    )
+    return res, verts
+
+
+def _rep_frame(spark, key: str, verts, res) -> DataFrame:
+    """(key, label, noise_level, eps_max) per hierarchy vertex, shipped
+    as an Arrow table: createDataFrame(pandas) falls back to row
+    pickling when the caller session leaves arrow.pyspark.enabled at
+    its Spark-4 default (false), and at 6M points this frame is
+    millions of rows."""
+    import pyarrow as pa
+
+    min_death = hk.cluster_min_death(res)
+    eps_max = np.fromiter(
+        (min_death[int(c)] for c in res.last_cluster), np.float64, len(verts)
+    )
+    return spark.createDataFrame(
+        pa.table(
+            {
+                key: pa.array(verts, pa.int64()),
+                "label": pa.array(res.labels.astype(np.int64), pa.int64()),
+                "noise_level": pa.array(res.noise_level, pa.float64()),
+                "eps_max": pa.array(eps_max, pa.float64()),
+            }
+        )
+    )
 
 
 def _tree_df(spark, res) -> DataFrame:

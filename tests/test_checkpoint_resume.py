@@ -25,7 +25,6 @@ PARAMS = dict(
     max_local_size=48,
     max_samples_per_subset=8,
     seed=23,
-    global_mode="contracted",
 )
 
 

@@ -1,11 +1,14 @@
-"""Differential tests: contracted global dendrogram vs the driver path.
+"""Differential tests: contracted global dendrogram vs a driver oracle.
 
-The contracted path (bubbles/kernels/contract_kernel.py +
-MRHDBSCAN(global_mode="contracted")) must reproduce the driver-side
-global step (plans/mrhdbscan.py:_global_step) exactly — same cluster
-tree (up to label renumbering), same per-point noise levels, GLOSH
-scores, and flat partition (up to label bijection). The exactness
-argument is in contract_kernel's module docstring / SCALE.md.
+The contracted global step (bubbles/kernels/contract_kernel.py +
+plans/mrhdbscan.py:_global_step_contracted) must reproduce the
+full-collect bottom-up build exactly — same cluster tree (up to label
+renumbering), same per-point noise levels, GLOSH scores, and flat
+partition (up to label bijection). The oracle, ``_driver_oracle``,
+rebuilds that result from the fitted model's own ``mst_edges`` (every
+global step stores the same leaf ∪ cross edge relation there), so each
+differential runs one fit. The exactness argument is in
+contract_kernel's module docstring / SCALE.md.
 """
 
 from __future__ import annotations
@@ -42,6 +45,10 @@ def _lattice(seed=3):
     return np.repeat(base, rng.integers(1, 4, size=len(base)), axis=0)
 
 
+def _nan_to(x, fill=-1.0):
+    return float(x) if x == x else fill
+
+
 def _collect_model(model):
     labels = {
         int(r["point_id"]): int(r["label"]) for r in model.labels.collect()
@@ -52,18 +59,58 @@ def _collect_model(model):
     }
     tree = sorted(
         (
-            float(r["birth_level"]) if r["birth_level"] == r["birth_level"] else -1.0,
-            float(r["death_level"]) if r["death_level"] == r["death_level"] else -1.0,
+            _nan_to(r["birth_level"]),
+            _nan_to(r["death_level"]),
             float(r["n_points"]),
-            float(r["stability"]) if r["stability"] == r["stability"] else -1.0,
+            _nan_to(r["stability"]),
         )
         for r in model.cluster_tree.collect()
     )
     return labels, scores, tree
 
 
-def _assert_equivalent(m_drv, m_con):
-    lab_d, sco_d, tree_d = _collect_model(m_drv)
+def _driver_oracle(model, min_cluster_size, constraints=None):
+    """The full-collect bottom-up dendrogram (paper §3.3.3) over the
+    model's merged edge relation: one ``hk.build_hierarchy`` over every
+    point, core distance = the point's self-edge weight, GLOSH from
+    ``hk.glosh_scores``. Returns ((labels, scores, tree), (res, verts)),
+    the triple in ``_collect_model``'s format."""
+    e = model.mst_edges.toArrow().to_pandas()
+    src = e["src"].to_numpy(np.int64)
+    dst = e["dst"].to_numpy(np.int64)
+    w = e["weight"].to_numpy(np.float64)
+    verts = np.unique(np.concatenate([src, dst]))
+    lu = np.searchsorted(verts, src)
+    lv = np.searchsorted(verts, dst)
+    local_constraints = None
+    if constraints is not None:
+        idx = {int(g): i for i, g in enumerate(verts)}
+        local_constraints = [
+            (r["kind"], idx[int(r["point_a"])], idx[int(r["point_b"])])
+            for r in constraints.select("kind", "point_a", "point_b").collect()
+            if int(r["point_a"]) in idx and int(r["point_b"]) in idx
+        ]
+    res = hk.build_hierarchy(
+        lu, lv, w, np.ones(len(verts)), min_cluster_size,
+        constraints=local_constraints,
+    )
+    core = np.zeros(len(verts))
+    self_mask = lu == lv
+    core[lu[self_mask]] = w[self_mask]
+    scores = hk.glosh_scores(res, core)
+    labels = {int(v): int(lbl) for v, lbl in zip(verts, res.labels)}
+    score_of = {
+        int(v): (float(s), float(c)) for v, s, c in zip(verts, scores, core)
+    }
+    tree = sorted(
+        (_nan_to(c.birth), _nan_to(c.death), float(c.n_points), _nan_to(c.stability))
+        for c in res.clusters.values()
+    )
+    return (labels, score_of, tree), (res, verts)
+
+
+def _assert_equivalent(oracle, m_con):
+    (lab_d, sco_d, tree_d), _ = oracle
     lab_c, sco_c, tree_c = _collect_model(m_con)
     assert set(lab_d) == set(lab_c)
     # same noise set; cluster labels equal up to bijection
@@ -89,35 +136,34 @@ def _assert_equivalent(m_drv, m_con):
 
 
 def _fit_both(spark, X, constraints=None, **kw):
+    """One contracted fit and its driver oracle."""
     params = dict(
         min_pts=4, min_cluster_size=5, max_local_size=64,
         max_samples_per_subset=16, seed=11,
     )
     params.update(kw)
-    df = to_df(spark, X)
-    m_drv = MRHDBSCAN(global_mode="driver", **params).fit(df, constraints=constraints)
-    m_con = MRHDBSCAN(global_mode="contracted", **params).fit(df, constraints=constraints)
-    assert m_con.n_iterations == m_drv.n_iterations
-    return m_drv, m_con
+    m_con = MRHDBSCAN(**params).fit(to_df(spark, X), constraints=constraints)
+    oracle = _driver_oracle(m_con, params["min_cluster_size"], constraints)
+    return oracle, m_con
 
 
 def test_contracted_matches_driver_recursive(spark):
-    m_drv, m_con = _fit_both(spark, _blobs())
+    oracle, m_con = _fit_both(spark, _blobs())
     assert m_con.n_iterations >= 1  # recursion (cross edges) exercised
-    _assert_equivalent(m_drv, m_con)
+    _assert_equivalent(oracle, m_con)
 
 
 def test_contracted_matches_driver_exact_path(spark):
     # single subset, no cross edges: pure-subtree contraction only
-    m_drv, m_con = _fit_both(spark, _blobs(n=150), max_local_size=4096)
+    oracle, m_con = _fit_both(spark, _blobs(n=150), max_local_size=4096)
     assert m_con.n_iterations == 0
-    _assert_equivalent(m_drv, m_con)
+    _assert_equivalent(oracle, m_con)
 
 
 def test_contracted_matches_driver_lattice(spark):
     # duplicate-heavy data drives mst_edges_grouped + tie-group events
-    m_drv, m_con = _fit_both(spark, _lattice(), min_cluster_size=4)
-    _assert_equivalent(m_drv, m_con)
+    oracle, m_con = _fit_both(spark, _lattice(), min_cluster_size=4)
+    _assert_equivalent(oracle, m_con)
 
 
 def test_contracted_matches_driver_with_constraints(spark):
@@ -126,21 +172,18 @@ def test_contracted_matches_driver_with_constraints(spark):
         [(5, 200, "cl"), (12, 30, "ml"), (250, 260, "ml")],
         schema="point_a long, point_b long, kind string",
     )
-    m_drv, m_con = _fit_both(spark, X, constraints=constraints)
-    _assert_equivalent(m_drv, m_con)
+    oracle, m_con = _fit_both(spark, X, constraints=constraints)
+    _assert_equivalent(oracle, m_con)
 
 
 def _writer_rows(model, full):
     """The per-level label matrix as the reference writer emits it:
     ``hk.hierarchy_levels`` over the retained vertices, expanded to
-    points through the contraction membership (identity without)."""
+    points through the contraction membership."""
     res, verts = model._hier
-    if model._membership is None:
-        members = {int(v): [int(v)] for v in verts}
-    else:
-        members: dict = {}
-        for r in model._membership.collect():
-            members.setdefault(int(r["rep_id"]), []).append(int(r["point_id"]))
+    members: dict = {}
+    for r in model._membership.collect():
+        members.setdefault(int(r["rep_id"]), []).append(int(r["point_id"]))
     return sorted(
         (float(w), p, int(lbl))
         for w, labels in hk.hierarchy_levels(res, full=full)
@@ -150,18 +193,22 @@ def _writer_rows(model, full):
 
 
 def test_contracted_hierarchy_levels_match(spark):
-    m_drv, m_con = _fit_both(spark, _blobs(n=180), max_local_size=48)
+    oracle, m_con = _fit_both(spark, _blobs(n=180), max_local_size=48)
+    _, (res_d, verts_d) = oracle
     for full in (False, True):
-        rows = {}
-        for name, m in (("driver", m_drv), ("contracted", m_con)):
-            rows[name] = sorted(
-                (float(r["level_weight"]), int(r["point_id"]), int(r["label"]))
-                for r in m.hierarchy_levels(full).collect()
-            )
-            # exactly the writer's matrix: a dropped level or label fails
-            assert rows[name] and rows[name] == _writer_rows(m, full), (name, full)
-        lv_d = {(round(w, 9), p): lbl for w, p, lbl in rows["driver"]}
-        lv_c = {(round(w, 9), p): lbl for w, p, lbl in rows["contracted"]}
+        rows = sorted(
+            (float(r["level_weight"]), int(r["point_id"]), int(r["label"]))
+            for r in m_con.hierarchy_levels(full).collect()
+        )
+        # exactly the writer's matrix: a dropped level or label fails
+        assert rows and rows == _writer_rows(m_con, full), full
+        # the oracle's matrix: one row per point (its own vertex)
+        lv_d = {
+            (round(float(w), 9), int(p)): int(lbl)
+            for w, labels in hk.hierarchy_levels(res_d, full=full)
+            for p, lbl in zip(verts_d, labels)
+        }
+        lv_c = {(round(w, 9), p): lbl for w, p, lbl in rows}
         assert set(lv_d) == set(lv_c)
         fwd: dict = {}
         for key, ld in lv_d.items():

@@ -1,4 +1,4 @@
-"""Differential tests: recursive (two-level) contraction vs the driver path.
+"""Differential tests: recursive (two-level) contraction vs a driver oracle.
 
 MRHDBSCAN(recursive_contraction=True) re-contracts the level-1
 retained-event graph per genealogy bin (plans/mrhdbscan.py
@@ -9,8 +9,12 @@ edges) is the global single-linkage structure restricted to the bin,
 so the v1/v2 purity lemma applies with level-1 virtual vertices as
 weighted leaves. These differentials pin labels (up to bijection),
 noise sets, GLOSH scores, core distances, and the cluster tree
-against the full-collect driver path — same contract as
-tests/test_contracted.py pins for the single-level pass.
+against the full-collect bottom-up build, rebuilt from the fitted
+model's own ``mst_edges`` by ``tests.test_contracted._driver_oracle``
+— same contract as tests/test_contracted.py pins for the single-level
+pass, one fit per differential. The ``_blobs()`` fits are shared: the
+module-scoped ``blobs_fits`` fixture fits that input once
+non-recursive and once recursive for every test that reads it.
 """
 
 from __future__ import annotations
@@ -25,49 +29,59 @@ from bubbles.plans.mrhdbscan import MRHDBSCAN, _genealogy_bins
 from tests.test_contracted import (
     _assert_equivalent,
     _blobs,
+    _driver_oracle,
     _lattice,
     to_df,
 )
 
+_PARAMS = dict(
+    min_pts=4, min_cluster_size=5, max_local_size=64,
+    max_samples_per_subset=16, seed=11,
+)
+
+
+@pytest.fixture(scope="module")
+def blobs_fits(spark):
+    """(m_sl, m_rec): ``_blobs()`` fitted once with
+    recursive_contraction=False and once with True. The fit is
+    deterministic, and no test mutates either model."""
+    df = to_df(spark, _blobs())
+    m_sl = MRHDBSCAN(recursive_contraction=False, **_PARAMS).fit(df)
+    m_rec = MRHDBSCAN(recursive_contraction=True, **_PARAMS).fit(df)
+    return m_sl, m_rec
+
 
 def _fit_pair(spark, X, constraints=None, **kw):
-    params = dict(
-        min_pts=4, min_cluster_size=5, max_local_size=64,
-        max_samples_per_subset=16, seed=11,
+    """One recursive fit and its driver oracle."""
+    params = dict(_PARAMS, **kw)
+    m_rec = MRHDBSCAN(recursive_contraction=True, **params).fit(
+        to_df(spark, X), constraints=constraints
     )
-    params.update(kw)
-    df = to_df(spark, X)
-    m_drv = MRHDBSCAN(global_mode="driver", **params).fit(
-        df, constraints=constraints
-    )
-    m_rec = MRHDBSCAN(
-        global_mode="contracted", recursive_contraction=True, **params
-    ).fit(df, constraints=constraints)
-    assert m_rec.n_iterations == m_drv.n_iterations
-    return m_drv, m_rec
+    oracle = _driver_oracle(m_rec, params["min_cluster_size"], constraints)
+    return oracle, m_rec
 
 
-def test_recursive_matches_driver_blobs(spark):
-    m_drv, m_rec = _fit_pair(spark, _blobs())
+def test_recursive_matches_driver_blobs(blobs_fits):
+    _, m_rec = blobs_fits
     assert m_rec.n_iterations >= 1  # cross edges + genealogy exercised
-    _assert_equivalent(m_drv, m_rec)
+    _assert_equivalent(_driver_oracle(m_rec, _PARAMS["min_cluster_size"]), m_rec)
 
 
 def test_recursive_matches_driver_lattice(spark):
     # duplicate-heavy data drives tie-group events through both levels
-    m_drv, m_rec = _fit_pair(spark, _lattice(), min_cluster_size=4)
-    _assert_equivalent(m_drv, m_rec)
+    oracle, m_rec = _fit_pair(spark, _lattice(), min_cluster_size=4)
+    _assert_equivalent(oracle, m_rec)
 
 
 def test_recursive_matches_driver_deep_genealogy(spark):
     # tiny local cap forces several sampling iterations -> a genealogy
     # tree with real depth, multiple bins, and above-frontier creators
-    m_drv, m_rec = _fit_pair(
+    oracle, m_rec = _fit_pair(
         spark, _blobs(n=900, seed=23), max_local_size=48,
         max_samples_per_subset=8,
     )
     assert m_rec.n_iterations >= 2
-    _assert_equivalent(m_drv, m_rec)
+    _assert_equivalent(oracle, m_rec)
 
 
 def test_recursive_constraints_fall_back(spark):
@@ -81,24 +95,18 @@ def test_recursive_constraints_fall_back(spark):
         schema="point_a long, point_b long, kind string",
     )
     with pytest.warns(RuntimeWarning, match="downgraded.*constraints"):
-        m_drv, m_rec = _fit_pair(spark, X, constraints=constraints)
-    _assert_equivalent(m_drv, m_rec)
+        oracle, m_rec = _fit_pair(spark, X, constraints=constraints)
+    _assert_equivalent(oracle, m_rec)
 
 
-def test_recursive_hierarchy_levels_delegates(spark):
+def test_recursive_hierarchy_levels_delegates(blobs_fits):
     """Round 11 (closes the round-9 refusal): hierarchy_levels under
     recursive contraction DELEGATES to the batched hierarchy_at over
     the writer's own level set instead of raising — same levels as
     the non-recursive matrix (compact AND full: cluster births +
     member noise gates), same partition per level up to a label
     bijection, same long format."""
-    df = to_df(spark, _blobs())
-    params = dict(
-        min_pts=4, min_cluster_size=5, max_local_size=64,
-        max_samples_per_subset=16, seed=11,
-    )
-    m_sl = MRHDBSCAN(recursive_contraction=False, **params).fit(df)
-    m_rec = MRHDBSCAN(recursive_contraction=True, **params).fit(df)
+    m_sl, m_rec = blobs_fits
 
     def _matrix(frame):
         out: dict = {}
@@ -282,14 +290,10 @@ def _assert_same_partition(a: dict, b: dict, eps):
         assert bwd.setdefault(lb, la) == la, f"merge at eps={eps}, p={p}"
 
 
-def test_hierarchy_at_matches_level_matrix(spark):
+def test_hierarchy_at_matches_level_matrix(blobs_fits):
     """Non-recursive: hierarchy_at(w) at every recorded full level
     must equal that hierarchy_levels row verbatim (same rule, one W)."""
-    df = to_df(spark, _blobs())
-    m = MRHDBSCAN(
-        min_pts=4, min_cluster_size=5, max_local_size=64,
-        max_samples_per_subset=16, seed=11,
-    ).fit(df)
+    m, _ = blobs_fits
     matrix: dict = {}
     for r in m.hierarchy_levels(full=True).collect():
         matrix.setdefault(float(r["level_weight"]), {})[
@@ -301,19 +305,13 @@ def test_hierarchy_at_matches_level_matrix(spark):
         assert _cut(m, w) == matrix[w], f"cut at recorded level {w}"
 
 
-def test_hierarchy_at_recursive_matches_single_level(spark):
+def test_hierarchy_at_recursive_matches_single_level(blobs_fits):
     """Recursive contraction: the level replayed from the durable
     pieces (level-2 labels at eps + exact level-1 detach weights) must
     equal the non-recursive cut at the same eps, up to a label
     bijection — at recorded levels, between them, below the lowest and
     above the highest."""
-    df = to_df(spark, _blobs())
-    params = dict(
-        min_pts=4, min_cluster_size=5, max_local_size=64,
-        max_samples_per_subset=16, seed=11,
-    )
-    m_sl = MRHDBSCAN(recursive_contraction=False, **params).fit(df)
-    m_rec = MRHDBSCAN(recursive_contraction=True, **params).fit(df)
+    m_sl, m_rec = blobs_fits
     res, _ = m_sl._hier
     ws = sorted({float(w) for w, _ in hk.hierarchy_levels(res, full=True)})
     probes = {
@@ -324,19 +322,13 @@ def test_hierarchy_at_recursive_matches_single_level(spark):
         _assert_same_partition(_cut(m_sl, eps), _cut(m_rec, eps), eps)
 
 
-def test_hierarchy_at_multi_level_matches_per_eps(spark):
+def test_hierarchy_at_multi_level_matches_per_eps(blobs_fits):
     """Round 10: hierarchy_at accepts a LIST of levels and replays the
     durable pieces once (one broadcast join, one membership join, long
     format). Differential: multi-eps == the per-eps calls verbatim in
     BOTH modes; recursive multi-eps == non-recursive cut up to a label
     bijection; duplicate levels collapse."""
-    df = to_df(spark, _blobs())
-    params = dict(
-        min_pts=4, min_cluster_size=5, max_local_size=64,
-        max_samples_per_subset=16, seed=11,
-    )
-    m_sl = MRHDBSCAN(recursive_contraction=False, **params).fit(df)
-    m_rec = MRHDBSCAN(recursive_contraction=True, **params).fit(df)
+    m_sl, m_rec = blobs_fits
     res, _ = m_sl._hier
     ws = sorted({float(w) for w, _ in hk.hierarchy_levels(res, full=True)})
     probes = sorted(
@@ -369,6 +361,40 @@ def test_hierarchy_at_multi_level_matches_per_eps(spark):
 
     with _pt.raises(ValueError, match="at least one level"):
         m_sl.hierarchy_at([])
+
+
+def test_hierarchy_at_broadcast_cap(blobs_fits, monkeypatch):
+    """hierarchy_at's level frame and the global steps' representative
+    frames share one broadcast rule: hinted up to ``_broadcast_cap``
+    rows (8M local, 2M on a cluster), a shuffle join past it, the same
+    rows either way. The rule takes the row count, so no large frame
+    is built here."""
+    from bubbles.plans import mrhdbscan as mr
+
+    assert mr._broadcast_cap("local[4]") == 8_000_000
+    assert mr._broadcast_cap("spark://host:7077") == 2_000_000
+    m_sl, m_rec = blobs_fits
+    tiny = m_sl._spark.range(1)
+
+    def hinted(df):
+        return "broadcast" in df._jdf.queryExecution().analyzed().toString()
+
+    # the perfbench hierarchy queries (≈17.8k vertices × 8 levels,
+    # ≈4.9k × 16) keep the hint; a 4936 × 2171-level full matrix drops it
+    for n_rows, want in (
+        (17_793 * 8, True),
+        (4_936 * 16, True),
+        (8_000_000, True),
+        (4_936 * 2_171, False),
+    ):
+        assert hinted(mr._broadcast_if_small(m_sl._spark, tiny, n_rows)) == want
+    levels = sorted(hk.hierarchy_level_set(m_sl._hier[0]))[:3]
+    for m in (m_sl, m_rec):
+        want = sorted(tuple(r) for r in m.hierarchy_at(levels).collect())
+        monkeypatch.setattr(mr, "_broadcast_cap", lambda master: 0)
+        got = sorted(tuple(r) for r in m.hierarchy_at(levels).collect())
+        monkeypatch.undo()
+        assert got == want
 
 
 def test_hierarchy_at_requires_retention(spark):
